@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — one JSON line with per-query timings at
   * `SPARK_GRAFT_SF_DIR`.
@@ -53,16 +52,6 @@ object Bench {
     val m = memInfoKb()
     m.getOrElse("Buffers", 0L) + m.getOrElse("Cached", 0L)
   }
-
-  /** Recursive on-disk bytes of a directory (the fixture working set).
-    * Symlinks contribute 0 and are NOT followed — a link loop in the
-    * fixture dir must not hang the bench before any query runs, and a link
-    * to a larger tree must not inflate the working-set evidence
-    * (round-12 ADVICE). */
-  private def treeBytes(f: java.io.File): Long =
-    if (java.nio.file.Files.isSymbolicLink(f.toPath)) 0L
-    else if (f.isDirectory) Option(f.listFiles()).map(_.map(treeBytes).sum).getOrElse(0L)
-    else f.length()
 
   /** Attribution governance (VERDICT r12 #3): an environmental attribution
     * for a growth flag is ACCEPTED — moved to `attributed_flags` instead of
@@ -123,69 +112,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt)
     // Optional args (local iteration only; the driver passes none): a
     // comma-separated list of query-name substrings to time — same contract
     // as Verify's third arg.
     val only: Option[Seq[String]] = args.headOption.map(_.split(',').toSeq)
     def selected(name: String): Boolean = only.forall(_.exists(name.contains))
-    val fixtureBytes = treeBytes(new java.io.File(sfDir))
-    // malformed override falls back to the data-sized default (with a
-    // stderr note) instead of crashing before any query runs
-    val initParts = sys.env.get("SPARK_GRAFT_INITIAL_PARTS")
-      .flatMap { v =>
-        val p = scala.util.Try(v.trim.toInt).toOption.filter(_ > 0)
-        if (p.isEmpty) System.err.println(
-          s"[bench] ignoring malformed SPARK_GRAFT_INITIAL_PARTS='$v'")
-        p
-      }
-      .getOrElse(math.min(4096L,
-        math.max(cpus.toLong, fixtureBytes / (8L << 20))).toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // belt-and-braces for bloomPredicate's two ≤384 MB sketch partials
-      // (RelOps.scala) — the default 1g leaves no headroom at the cap
-      .config("spark.driver.maxResultSize", "2g")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // every exchange STARTS at initParts partitions and AQE coalesces it
-      // to ~advisory-sized reducer inputs measured from the actual map
-      // output. This is what keeps corpus-mass aggregates' final-agg hash
-      // maps memory-resident at ANY SF (the q93 sf300 partition cliff:
-      // HashAggregate falls into sort-based spilling when distinct-key mass
-      // / #reducers outgrows the task's map) WITHOUT sacrificing map-side
-      // partial combine the way an explicit pre-aggregate repartition did
-      // (round-11 ADVICE) — the aggregate keeps its own exchange, so
-      // partial states collapse before the wire.
-      //
-      // The starting count is DATA-SIZED, not a constant: a fixed 2048 was
-      // measured at sf0.1 to cost the catalog +33 s (q227 1.1→6.9 s, the
-      // text aggregates +1-3 s each) — every map task pays per-bucket
-      // writer overhead on every shuffle, coalesced or not, so the start
-      // count must scale with the run's data like the reducer count it
-      // feeds. fixture/8 MB ≈ one initial partition per ~32 MB of exploded
-      // exchange mass (the n-gram streams run ~4× the at-rest corpus):
-      // sf0.1 (17 MB) stays at #cores — baseline behavior unchanged —
-      // while sf1000 (9.4 GB documents) starts at ~1200 and AQE settles
-      // the real corpus-mass exchanges near the advisory size. On a real
-      // cluster this is just "size shuffle.partitions to the input", the
-      // standing deployment practice this local knob stands in for.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initParts.toString)
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "52428800")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // default codegen class cache (100 entries) thrashes across this
-      // 61-query surface (several codegen stages per query): big generated
-      // classes (q29's 12-min agg) would re-janino-compile EVERY pass,
-      // charging seconds of compiler time to the timed run
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val fixtureBytes = Sessions.fixtureBytes(sfDir)
+    val spark = Sessions.local(Some(sfDir))
 
     // Fixed-cost contention canary: 2^27 multiply-sum, no I/O, no shuffle —
     // cost depends only on available CPU. Scientific value: none; diagnostic
@@ -521,14 +455,6 @@ object Bench {
     // complete map is in bench_full.json next to the repo root.
     val fullQs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // minimal JSON string escape for attribution reasons (builder-authored
-    // env text must never break the driver's json.load)
-    def jesc(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val growthJson = growth.map { case (ratios, live, attributed) =>
       val rs = ratios.toSeq.sortBy(-_._2)
         .map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
@@ -542,7 +468,7 @@ object Bench {
         // values checkAttribution validated against sit next to it so the
         // acceptance is re-checkable from the artifact alone
         val bc = bestBc.get(key).map(_.toString).getOrElse("null")
-        s""""$key":{"ratio":$r,"bound":$bound,"cap":${bound * AttributionCapFactor},"fixture_bytes":$fixtureBytes,"buff_cache_kb_at_min_pass":$bc,"reason":${jesc(attributions(key))}}"""
+        s""""$key":{"ratio":$r,"bound":$bound,"cap":${bound * AttributionCapFactor},"fixture_bytes":$fixtureBytes,"buff_cache_kb_at_min_pass":$bc,"reason":${Verify.jsonString(attributions(key))}}"""
       }.mkString("{", ",", "}")
       s""","growth":{"base_dir":"${growthBase.get}","bound":$growthBound,"floor_sec":$growthFloor,"ratios":$rs,"flags":$fl,"attributed_flags":$af}"""
     }.getOrElse("")

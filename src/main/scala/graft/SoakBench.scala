@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming-state soak benchmark (round 10, VERDICT r9 #3): the streaming
@@ -60,28 +60,12 @@ object SoakBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val waves = sys.env.getOrElse("SPARK_GRAFT_SOAK_WAVES", "4").toInt
     val scratch = args.headOption.getOrElse("/tmp/graft_soak_bench")
     val outPath = if (args.length > 1) args(1) else "soak_result.json"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // overridable initial exchange partitioning (see Bench) — the soak
-      // corpus is generated into scratch, so there is no fixture to size
-      // from up front; default keeps the session's #cores behavior
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.get("SPARK_GRAFT_INITIAL_PARTS")
-          .flatMap(v => scala.util.Try(v.trim.toInt).toOption.filter(_ > 0))
-          .map(_.toString).getOrElse(cpus.toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // belt-and-braces for bloomPredicate's two ≤384 MB sketch partials
-      .config("spark.driver.maxResultSize", "2g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the soak corpus is generated into scratch: no fixture to size the
+    // initial exchange partitions from, so they stay at #cores
+    val spark = Sessions.local()
     graft.engine.Fs.rmTree(scratch)
 
     val flags = scala.collection.mutable.ListBuffer[String]()

@@ -1,9 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json for the DuckDB comparison (tools/check.py), and
+  * verify_errors.json (query → `Class: message`, `{}` on a clean run). */
 object Verify {
+  /** JSON string literal: escapes backslash, quote, and ALL control chars
+    * (<0x20) — a tab or CR in a query's SQL would otherwise make json.load
+    * fail on the whole file. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  private def jsonObject(kvs: Iterable[(String, String)]): String =
+    kvs.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // Optional 3rd arg (local iteration only; the driver passes 2): a
@@ -11,64 +27,21 @@ object Verify {
     val only: Option[Seq[String]] = args.drop(2).headOption.map(_.split(',').toSeq)
     def selected(name: String): Boolean =
       only.forall(_.exists(name.contains))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Opt-in ANSI dual-run (SPARK_GRAFT_ANSI=true): the engine's integer
-    // division / overflow conventions are load-bearing in ~40 queries, and
-    // non-ANSI Spark turns a class of defects (overflow wrap, bad casts,
-    // div-by-zero) into silent NULLs the oracle may coincidentally match.
-    // A periodic ANSI pass catches that class wholesale; the driver never
-    // sets the var, so per-round behavior is unchanged.
-    val ansi = sys.env.getOrElse("SPARK_GRAFT_ANSI", "false").toBoolean
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.ansi.enabled", ansi)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // data-sized reducer counts for corpus-mass aggregates (see Bench):
-      // initial partitions scale with the fixture so AQE can settle big
-      // exchanges near the advisory size without taxing small runs
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        math.min(4096L, math.max(cpus.toLong, {
-          def sz(f: java.io.File): Long =
-            if (f.isDirectory)
-              Option(f.listFiles()).map(_.map(sz).sum).getOrElse(0L)
-            else f.length()
-          sz(new java.io.File(sfDir)) / (8L << 20)
-        })).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", "52428800")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // belt-and-braces for bloomPredicate's two ≤384 MB sketch partials
-      // (RelOps.scala) — the default 1g leaves no headroom at the cap
-      .config("spark.driver.maxResultSize", "2g")
-      .config("spark.sql.codegen.cache.maxEntries", "5000") // 61 plans > default 100
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_ANSI=true runs the dump under ANSI (see Sessions)
+    val spark = Sessions.local(Some(sfDir))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val errors = SparkEntry.queries.toSeq.filter(kv => selected(kv._1)).flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> s"${e.getClass.getSimpleName}: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      jsonObject(SparkEntry.oracleSql.filter(kv => selected(kv._1))))
+    Files.writeString(Paths.get(s"$outDir/verify_errors.json"), jsonObject(errors))
     spark.stop()
   }
 }

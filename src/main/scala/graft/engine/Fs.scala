@@ -17,10 +17,11 @@ object Fs {
     * bench/verify drivers construct every query fresh on every pass, so the
     * same immutable table was being re-resolved hundreds of times per run
     * (measured: 40-85 ms of the per-query plan-construction time at sf0.1;
-    * guide §6 file listing / §7.3 driver-side work — PlanTime probe,
-    * OPTIMIZATION_r13.md). Memoizing the resolution is the catalog-table
-    * discipline (Spark's own `filesourcePartitionFileCacheSize` caches
-    * listings per session for catalog tables): NO data is cached — every
+    * guide §6 file listing / §7.3 driver-side work — OPTIMIZATION_r13.md;
+    * `perfbench/run.py --trace 1` records it as `catalog.construct_ms`).
+    * Memoizing the resolution is the catalog-table discipline (Spark's own
+    * `filesourcePartitionFileCacheSize` caches listings per session for
+    * catalog tables): NO data is cached — every
     * execution still scans the parquet bytes — only the logical read plan
     * (schema + file index) is reused, exactly as if the path had been
     * registered as an external table once at session start.

@@ -1,10 +1,12 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftexpr.ExprColumn
 import graft.engine.Tables
-import graft.functions.VectorExpressions
+import graft.functions.{ArgMaxCell, ArgMinCellL2, VectorExpressions}
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float>, label).
@@ -493,21 +495,17 @@ object Similarity {
     * (array-typed buffers fall off HashAggregate); measured 9.0 s → 2.1 s
     * for the sf10 assignment. Same winner bit-for-bit: total double order,
     * ties to the lower cid (the oracle's ORDER BY ccos DESC, centroid_id). */
-  private def assignCells(all: DataFrame, cents: Seq[IvfCentroidLit],
-      spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    // the centroid table must sit INSIDE the expression node as a literal (a
-    // column reference is not foldable at analysis time), so the sample is
-    // bound via the function registry — the same mechanism every graft
-    // expression uses — under a per-dataset name (the growth gate runs two SF
-    // dirs in one session; the binding is deterministic per dir, so
-    // re-registration is idempotent)
-    val centsLit = Literal.create(cents)
-    val fname = s"graft_ivf_assign_${graft.engine.Fs.dirTag(dir)}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname, exprs => graft.functions.ArgMaxCell(exprs(0), exprs(1), centsLit),
-      "scala_udf")
-    all.withColumn("cell", expr(s"$fname(v, nrm)"))
+  private def assignCells(all: DataFrame, cents: Seq[IvfCentroidLit]): DataFrame =
+    all.withColumn("cell", argMaxCell(cents)(col("v"), col("nrm")))
+
+  /** [[graft.functions.ArgMaxCell]] over `cents` as a Column builder
+    * (v, nrm) => cell. The table must sit INSIDE the expression node as a
+    * literal (a column reference is not foldable at analysis time), so the
+    * Column is built from the expression directly — no per-dataset function
+    * registration, so nothing accumulates in the session registry. */
+  private def argMaxCell(cents: Seq[IvfCentroidLit])(v: Column, nrm: Column): Column = {
+    val table = Literal.create(cents)
+    ExprColumn(ArgMaxCell(ExprColumn.expression(v), ExprColumn.expression(nrm), table))
   }
 
   /** IVF cell centroids in SQ8 code space — the index-maintenance counterpart
@@ -523,7 +521,7 @@ object Similarity {
     * output). No self-join anywhere. */
   def ivfCellCentroids(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
-    val assigned = assignCells(all, centroidLits(all, spark), spark, dir)
+    val assigned = assignCells(all, centroidLits(all, spark))
       .select(col("vec_id"), col("v"), col("cell"))
     assigned
       .withColumn("mn", array_min(col("v")))
@@ -566,7 +564,7 @@ object Similarity {
     val all = vecs(spark, dir)
     val lits = centroidLits(all, spark)
     val cents = centroidFrame(spark, lits)
-    val assigned = assignCells(all, lits, spark, dir)
+    val assigned = assignCells(all, lits)
       .select(col("vec_id").as("neighbor_id"), col("v").as("nv"),
         col("nrm").as("nn"), col("cell"))
     val byCos = Window.partitionBy(col("vec_id"))
@@ -612,7 +610,7 @@ object Similarity {
     * shard-size bound is needed for exactness. */
   def ivfCellBalance(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
-    val assigned = assignCells(all, centroidLits(all, spark), spark, dir)
+    val assigned = assignCells(all, centroidLits(all, spark))
     assigned.groupBy(col("cell")).agg(count(lit(1)).as("s"))
       .agg(
         count(lit(1)).as("n_cells"),
@@ -967,22 +965,16 @@ object Similarity {
           s"kmeans: no seed vectors (vec_id % $seedModEff == 0) in $dir")
         // ONE codegen expression per round ([[graft.functions.ArgMinCellL2]]):
         // the driver-collected centroids ride INSIDE the expression node as a
-        // foldable literal (bound via the function registry under a
-        // per-(dir, spec, round) name — the IVF assignment's mechanism), and
-        // the exact-integer argmin with the (dist, cid) tie-break runs as one
+        // foldable literal (the IVF assignment's mechanism), and the
+        // exact-integer argmin with the (dist, cid) tie-break runs as one
         // primitive loop in WholeStageCodegen. This replaced the round-7 dual
         // path (unrolled literal small-k / typed-array HOF large-k): the HOF
         // form paid an interpreted lambda per (row, centroid) — the sf100
         // gate measured the 2 M × 32.8 k assignment at ~an hour per round —
         // and the unrolled form's plan size grew with k.
         val lits = cents.toSeq.map(r => CentroidLit(r.getLong(0), r.getSeq[Long](1)))
-        val centsLit = org.apache.spark.sql.catalyst.expressions.Literal.create(lits)
-        val fname = s"graft_km_assign_${graft.engine.Fs.dirTag(dir)}" +
-          s"_i${iters}_s${seedMod}_k${k}_r$it"
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          fname, exprs => graft.functions.ArgMinCellL2(exprs(0), centsLit),
-          "scala_udf")
-        val assigned = qv.withColumn("cell", expr(s"$fname(q)"))
+        val assigned = qv.withColumn("cell", ExprColumn(
+          ArgMinCellL2(ExprColumn.expression(col("q")), Literal.create(lits))))
         def updFrom(a: DataFrame): DataFrame = a
           .select(col("cell"), posexplode(col("q")).as(Seq("pos", "comp")))
           .groupBy(col("cell"), col("pos"))
@@ -1123,11 +1115,11 @@ object Similarity {
     * Scale shape — the bounded-seed pattern (same sanctioned driver-collect
     * as the IVF/k-means seeds): a benchmark is thousands of items while the
     * corpus is billions, so the eval set is COLLECTED and bound as a typed
-    * literal inside [[graft.functions.ArgMaxCell]] under a per-dir registered
-    * function — nearest-eval assignment is then a pure whole-stage-codegen
-    * projection over one corpus scan: no n × m candidate materialization, no
-    * shuffle of the corpus at all (the relational window/max_by forms of this
-    * argmax are the measured sf10 losers documented on the expression). The
+    * literal inside [[graft.functions.ArgMaxCell]] — nearest-eval assignment
+    * is then a pure whole-stage-codegen projection over one corpus scan: no
+    * n × m candidate materialization, no shuffle of the corpus at all (the
+    * relational window/max_by forms of this argmax are the measured sf10
+    * losers documented on the expression). The
     * only join is the broadcast fetch of the winning eval vector (eval-sized
     * build side) to expose the cosine itself. At 100 TB: benchmark in RAM on
     * every executor, corpus streams through once.
@@ -1157,18 +1149,19 @@ object Similarity {
       bench, tau).orderBy("vec_id")
   }
 
-  /** The driver-collected eval benchmark ready for screening: the registered
-    * argmax function name, the eval dimension frame for the cosine fetch, and
-    * the derived membership mod. One value object so the batch screen (q234)
-    * and the streaming ingest screen ([[graft.streaming.Streams.deconStream]])
-    * share one benchmark artifact — in deployment the benchmark is REGISTERED
-    * ONCE (a fixed artifact) and corpora/waves are screened against it. */
-  case class EvalBenchmark(fname: String, evalDim: DataFrame, evalMod: Long)
+  /** The driver-collected eval benchmark ready for screening: the
+    * nearest-eval Column builder (v, nrm) => eval_id, the eval dimension
+    * frame for the cosine fetch, and the derived membership mod. One value
+    * object so the batch screen (q234) and the streaming ingest screen
+    * ([[graft.streaming.Streams.deconStream]]) share one benchmark artifact —
+    * in deployment the benchmark is REGISTERED ONCE (a fixed artifact) and
+    * corpora/waves are screened against it. */
+  case class EvalBenchmark(nearest: (Column, Column) => Column, evalDim: DataFrame,
+      evalMod: Long)
 
   /** Collect the benchmark from `dir` and bind it (see
     * [[semanticDecontaminate]] for the sizing law and scale argument). */
   def evalBenchmark(spark: SparkSession, dir: String): EvalBenchmark = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
     val all = vecs(spark, dir)
     val evalMod = math.max(50L, all.count() / 1000L)
     val evalRows = all.filter(col("vec_id") % evalMod === 0)
@@ -1177,13 +1170,8 @@ object Similarity {
       s"decontaminate: no eval sample (vec_id % $evalMod == 0) in the corpus")
     val evalLits = evalRows.toSeq.map(r =>
       IvfCentroidLit(r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
-    val evalLit = Literal.create(evalLits)
-    val fname = s"graft_decon_assign_${graft.engine.Fs.dirTag(dir)}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname, exprs => graft.functions.ArgMaxCell(exprs(0), exprs(1), evalLit),
-      "scala_udf")
     import spark.implicits._
-    EvalBenchmark(fname, evalLits.toDF("eval_id", "ev", "en"), evalMod)
+    EvalBenchmark(argMaxCell(evalLits), evalLits.toDF("eval_id", "ev", "en"), evalMod)
   }
 
   /** The screen itself over any (vec_id, v, nrm) frame — batch or streaming
@@ -1197,7 +1185,7 @@ object Similarity {
   def deconScreen(vframe: DataFrame, bench: EvalBenchmark,
       tau: Double = 0.4): DataFrame =
     vframe
-      .withColumn("nearest_eval_id", expr(s"${bench.fname}(v, nrm)"))
+      .withColumn("nearest_eval_id", bench.nearest(col("v"), col("nrm")))
       .join(broadcast(bench.evalDim), col("nearest_eval_id") === col("eval_id"))
       .withColumn("cos", expr("graft_dot(v, ev)") / (col("nrm") * col("en")))
       .select(col("vec_id"), col("nearest_eval_id"),

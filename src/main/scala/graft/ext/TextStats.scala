@@ -651,8 +651,9 @@ object TextStats {
     * builder runs an EAGER driver-side job at DataFrame-construction time —
     * the benchmark-side bitmap collect (bounded by mBits = 8 KB at the
     * default; the fixed-benchmark law bounds the scanned side to ~1000
-    * docs). Callers that only want the plan (plan dumps, PlanTime probes)
-    * pay that job on first construction. The bitmap and its broadcast are
+    * docs). Callers that only want the plan (plan dumps, the construction
+    * phase `perfbench/run.py --trace 1` times) pay that job on first
+    * construction. The bitmap and its broadcast are
     * MEMOIZED per (documents signature, mBits, kHashes, mod) — the at-rest
     * index discipline ([[graft.ext.Dedup.prefixIndexTable]]): the benchmark
     * set is immutable within a run, so later constructions reuse the

@@ -8,75 +8,51 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * at session build time, so deployments can enable them cluster-wide with
   * `spark.sql.extensions=graft.functions.GraftExtensions` (no code changes in
   * user jobs). Local callers can equivalently use
-  * [[VectorExpressions.register]] on an existing session.
+  * [[VectorExpressions.register]] on an existing session; both read
+  * [[GraftExtensions.functions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot_long"),
-      new ExpressionInfo(classOf[LongDotProduct].getName, "graft_dot_long"),
-      (exprs: Seq[Expression]) => LongDotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bounded_lev"),
-      new ExpressionInfo(classOf[BoundedLevenshtein].getName, "graft_bounded_lev"),
-      (exprs: Seq[Expression]) => BoundedLevenshtein(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (exprs: Seq[Expression]) => NfcNormalize(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_skeleton"),
-      new ExpressionInfo(classOf[ConfusableSkeleton].getName, "graft_skeleton"),
-      (exprs: Seq[Expression]) => ConfusableSkeleton(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash_sig"),
-      (exprs: Seq[Expression]) => MinHashSignature(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sq8"),
-      new ExpressionInfo(classOf[Sq8Codes].getName, "graft_sq8"),
-      (exprs: Seq[Expression]) => Sq8Codes(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_gram_hashes"),
-      new ExpressionInfo(classOf[GramHashes].getName, "graft_gram_hashes"),
-      // n must be a foldable int literal — the gram width is a plan-time
-      // constant everywhere (2/3/5), never data
-      (exprs: Seq[Expression]) => GramHashes(exprs(0), exprs(1).eval() match {
-        case i: Int => i
-        case other => throw new IllegalArgumentException(
-          s"graft_gram_hashes(words, n): n must be an int literal, got $other")
-      })))
-    ext.injectFunction((
-      FunctionIdentifier("graft_md5_prefix"),
-      new ExpressionInfo(classOf[Md5Prefix].getName, "graft_md5_prefix"),
-      // n must be a foldable int literal — the hex-prefix width is a
-      // plan-time constant everywhere (4/7/15), never data
-      (exprs: Seq[Expression]) => Md5Prefix(exprs(0), exprs(1).eval() match {
-        case i: Int => i
-        case other => throw new IllegalArgumentException(
-          s"graft_md5_prefix(s, n): n must be an int literal, got $other")
-      })))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(classOf[BloomMightContainLong].getName, "graft_bloom_contains"),
-      // the handle resolves to a broadcast sketch at analysis time, on the
-      // driver — see BloomRegistry
-      (exprs: Seq[Expression]) => BloomMightContainLong(exprs(0),
-        BloomRegistry.resolve(exprs(1).eval().toString))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_positions"),
-      new ExpressionInfo(classOf[BloomPositions].getName, "graft_bloom_positions"),
-      (exprs: Seq[Expression]) => BloomPositions(exprs(0),
-        BloomRegistry.resolve(exprs(1).eval().toString))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bitmap_contains"),
-      new ExpressionInfo(classOf[BitmapContainsLong].getName, "graft_bitmap_contains"),
-      (exprs: Seq[Expression]) => BitmapContainsLong(exprs(0),
-        BloomRegistry.resolve(exprs(1).eval().toString))))
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => SpecializeFloatDot)
   }
+}
+
+object GraftExtensions {
+  private def fn(name: String, cls: Class[_])(
+      build: Seq[Expression] => Expression): SparkSessionExtensions#FunctionDescription =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** A plan-time constant int argument (gram width 2/3/5, hex-prefix width
+    * 4/7/15), never data. */
+  private def intLiteral(signature: String, e: Expression): Int = e.eval() match {
+    case i: Int => i
+    case other => throw new IllegalArgumentException(
+      s"$signature: n must be an int literal, got $other")
+  }
+
+  /** Every native function of the engine, by SQL name. */
+  val functions: Seq[SparkSessionExtensions#FunctionDescription] = Seq(
+    fn("graft_dot", classOf[DotProduct])(e => DotProduct(e(0), e(1))),
+    fn("graft_dot_long", classOf[LongDotProduct])(e => LongDotProduct(e(0), e(1))),
+    // the centroid table (third argument) must be a foldable literal
+    fn("graft_argmax_cell", classOf[ArgMaxCell])(e => ArgMaxCell(e(0), e(1), e(2))),
+    fn("graft_bounded_lev", classOf[BoundedLevenshtein])(e =>
+      BoundedLevenshtein(e(0), e(1), e(2))),
+    fn("graft_nfc", classOf[NfcNormalize])(e => NfcNormalize(e(0))),
+    fn("graft_skeleton", classOf[ConfusableSkeleton])(e => ConfusableSkeleton(e(0))),
+    fn("graft_minhash_sig", classOf[MinHashSignature])(e => MinHashSignature(e(0))),
+    fn("graft_sq8", classOf[Sq8Codes])(e => Sq8Codes(e(0))),
+    fn("graft_gram_hashes", classOf[GramHashes])(e =>
+      GramHashes(e(0), intLiteral("graft_gram_hashes(words, n)", e(1)))),
+    fn("graft_md5_prefix", classOf[Md5Prefix])(e =>
+      Md5Prefix(e(0), intLiteral("graft_md5_prefix(s, n)", e(1)))),
+    // the handle resolves to a broadcast sketch at analysis time, on the
+    // driver — see BloomRegistry
+    fn("graft_bloom_contains", classOf[BloomMightContainLong])(e =>
+      BloomMightContainLong(e(0), BloomRegistry.resolve(e(1).eval().toString))),
+    fn("graft_bloom_positions", classOf[BloomPositions])(e =>
+      BloomPositions(e(0), BloomRegistry.resolve(e(1).eval().toString))),
+    fn("graft_bitmap_contains", classOf[BitmapContainsLong])(e =>
+      BitmapContainsLong(e(0), BloomRegistry.resolve(e(1).eval().toString))))
 }

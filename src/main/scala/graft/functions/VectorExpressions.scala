@@ -435,58 +435,21 @@ case class ArgMinCellL2(first: Expression, second: Expression)
 }
 
 object VectorExpressions {
-  /** Register the engine's native functions (`graft_dot`,
-    * `graft_bounded_lev`) in the session's function registry so plans (and
-    * SQL) can call them, plus the float-specialization optimizer rule; all
-    * idempotent. (Cluster deployments get the same via [[GraftExtensions]].) */
+  /** Register the engine's native functions ([[GraftExtensions.functions]])
+    * in the session's function registry so plans (and SQL) can call them,
+    * plus the float-specialization optimizer rule. Idempotent and cheap: a
+    * session built with [[GraftExtensions]] (or an earlier call) already
+    * holds every function and is left untouched — re-registering would flood
+    * every log with SimpleFunctionRegistry replace warnings. */
   def register(spark: SparkSession): Unit = {
-    // once per session: sessions built with GraftExtensions (or an earlier
-    // register call) already carry the functions, and re-registering floods
-    // every log with SimpleFunctionRegistry replace warnings
-    if (spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"))) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_long", exprs => LongDotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_argmax_cell",
-      exprs => ArgMaxCell(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bounded_lev",
-      exprs => BoundedLevenshtein(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalize(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_skeleton", exprs => ConfusableSkeleton(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig", exprs => MinHashSignature(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sq8", exprs => Sq8Codes(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_hashes", exprs => GramHashes(exprs(0), exprs(1).eval() match {
-        case i: Int => i
-        case other => throw new IllegalArgumentException(
-          s"graft_gram_hashes(words, n): n must be an int literal, got $other")
-      }), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_md5_prefix", exprs => Md5Prefix(exprs(0), exprs(1).eval() match {
-        case i: Int => i
-        case other => throw new IllegalArgumentException(
-          s"graft_md5_prefix(s, n): n must be an int literal, got $other")
-      }), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains", exprs => BloomMightContainLong(exprs(0),
-        BloomRegistry.resolve(exprs(1).eval().toString)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_positions", exprs => BloomPositions(exprs(0),
-        BloomRegistry.resolve(exprs(1).eval().toString)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bitmap_contains", exprs => BitmapContainsLong(exprs(0),
-        BloomRegistry.resolve(exprs(1).eval().toString)), "scala_udf")
-    if (!spark.experimental.extraOptimizations.contains(SpecializeFloatDot))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SpecializeFloatDot
+    val registry = spark.sessionState.functionRegistry
+    val missing = GraftExtensions.functions.filterNot(f => registry.functionExists(f._1))
+    if (missing.nonEmpty) {
+      missing.foreach { case (name, info, build) => registry.registerFunction(name, info, build) }
+      if (!spark.experimental.extraOptimizations.contains(SpecializeFloatDot))
+        spark.experimental.extraOptimizations =
+          spark.experimental.extraOptimizations :+ SpecializeFloatDot
+    }
   }
 }
 

@@ -1558,6 +1558,18 @@ class ExtSpec extends SparkSuite {
     assert(!rows.contains(0L) && !rows.contains(50L))
   }
 
+  test("centroid-literal assignment leaves no function behind in the session registry") {
+    // a fresh session: only what these calls register can show up
+    val s = spark.newSession()
+    // parameters no other spec uses, so the k-means state is trained here
+    Similarity.kmeansStatePath(s, dir, iters = 2, seedMod = 53, k = 3)
+    Similarity.ivfCellBalance(s, dir).collect()
+    Similarity.semanticDecontaminate(s, dir).collect() // evalBenchmark + deconScreen
+    val leaked = s.sessionState.functionRegistry.listFunction().map(_.funcName)
+      .filter(_.matches("graft_.*_assign_.*"))
+    assert(leaked.isEmpty, s"per-dataset functions left registered: ${leaked.mkString(", ")}")
+  }
+
   test("long repeat spans: arbitrary-offset repeats found, overlapping repeats merge maximally") {
     val s = spark; import s.implicits._
     val rep = (1 to 8).map(i => s"R$i").mkString(" ")     // 8-token repeat
